@@ -39,28 +39,7 @@ import graft.sources.TableStore
   * the fact entirely. Neither term ever reads the view's untouched
   * shards, and the view itself stays ndv-of-groups sized.
   */
-/** Codec for pending-intent MARKER tokens: the advance's (from, to)
-  * version windows in table order, "f:t,f:t,…". Decode is tolerant —
-  * any malformed token reads as None, the documented "no pending"
-  * (that window's refresh provably had not started).
-  */
-private[ops] object PendingMarker {
-  def encode(ws: Seq[(Int, Int)]): String =
-    ws.map { case (f, t) => s"$f:$t" }.mkString(",")
-  def decode(tok: String): Option[Seq[(Int, Int)]] =
-    scala.util.Try(tok.split(",").toSeq.map { p =>
-      val Array(f, t) = p.split(":")
-      (f.toInt, t.toInt)
-    }).toOption.filter(_.nonEmpty)
-}
-
 object JoinMv {
-
-  /** The pre-star two-table cursor's table name — kept only so
-    * [[follow]] can ADOPT a surviving view built before the star
-    * generalization instead of silently full-reseeding it.
-    */
-  private def legacyCursorTable(name: String) = s"${name}__jmv_cursor"
 
   /** The view (same state as any [[MvStore]] view). */
   def read(store: TableStore, name: String): DataFrame =
@@ -91,25 +70,6 @@ object JoinMv {
       groupCols: Seq[String],
       sumCols: Seq[String],
       minMaxCols: Seq[String] = Nil): ((Int, Int), (Int, Int)) = {
-    // MIGRATION: a view built by the pre-star follow persists its
-    // cursor as `__jmv_cursor` (fact_v, dim_v). Adopt it into the
-    // star cursor ONCE — identity columns take this call's tables and
-    // keys, the same trust the legacy cursor carried (it stored none)
-    // — so the view advances incrementally instead of full-reseeding.
-    // The legacy table is left in place, inert (the star cursor's
-    // existence gates this branch off forever after).
-    if (MvStore.exists(store, name) &&
-        !store.exists(cursorStarTable(name)) &&
-        store.exists(legacyCursorTable(name))) {
-      val spark = store.spark
-      import spark.implicits._
-      val r = store.read(legacyCursorTable(name))
-        .select("fact_v", "dim_v").head()
-      store.overwrite(Seq(
-        (0, r.getInt(0), factDir, ""),
-        (1, r.getInt(1), dimDir, joinKeys.mkString(",")))
-        .toDF("idx", "ver", "tbl", "keys"), cursorStarTable(name))
-    }
     // the two-table form IS the one-dim star — one cursor machinery,
     // one pending-intent protocol, one delta construction
     val rs = followStar(store, name, factDir, Seq((dimDir, joinKeys)),
@@ -182,13 +142,6 @@ object JoinMv {
       org.apache.spark.sql.types.StringType),
     org.apache.spark.sql.types.StructField("keys",
       org.apache.spark.sql.types.StringType)))
-  private val PendingSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("idx",
-      org.apache.spark.sql.types.IntegerType),
-    org.apache.spark.sql.types.StructField("fromv",
-      org.apache.spark.sql.types.IntegerType),
-    org.apache.spark.sql.types.StructField("tov",
-      org.apache.spark.sql.types.IntegerType)))
 
   /** N-TABLE incremental join view — the star/snowflake
     * generalization of [[follow]]: a fact joined through `dims` (in
@@ -271,58 +224,19 @@ object JoinMv {
           "the call")
     }
     val from = curRows.map(_.getInt(0)).toSeq
-    // PENDING INTENT: the advance's TARGET versions persist BEFORE
-    // the refresh, so a retry after a crash resumes the EXACT window
-    // the stamped batch covered — without it, a source committing
-    // between crash and retry would change the batch id, the stamp
-    // would not recognize the replay, and the old window would apply
-    // twice. A pending row matches only while `from` still equals the
-    // window start (the pin moving makes it stale by construction, no
-    // cleanup write needed); a pending target pruned away by a racing
-    // vacuum falls back to the live versions.
+    // PENDING INTENT ([[StoreTxn.resumeWindow]]): without it, a source
+    // committing between a crash and the retry would change the batch
+    // id, and the old window would apply twice
     val pendingT = s"${name}__jmvs_pending"
-    val curs: Seq[Int] = {
-      val now = dirs.map(TxLog.currentVersion(spark, _))
-      // the pending slot is a MARKER ([[TableStore.markerSet]] — a
-      // file on the parquet backend, zero Spark jobs per advance; the
-      // former 1-row-table overwrite + read were two more jobs), the
-      // window pairs encoded in the token as "f:t,f:t,…" in table
-      // order. TOLERANT read — a crash inside the marker write itself
-      // must read as NO pending (that window's refresh provably had
-      // not started), never wedge on an unreadable slot; same guard
-      // as MvStore.followTxLog's. A slot written by the old TABLE
-      // protocol before an upgrade still resolves: the marker read
-      // falls back to the legacy tolerant table read below.
-      val windows: Option[Seq[(Int, Int)]] =
-        scala.util.Try(store.markerHolder(pendingT)).toOption.flatten
-          .flatMap(PendingMarker.decode)
-          .orElse {
-            // legacy TABLE-protocol slot written before the marker
-            // upgrade — read it the old tolerant way, once (the first
-            // marker write clears the table files)
-            if (!store.exists(pendingT)) None
-            else scala.util.Try(store.read(pendingT, PendingSchema)
-                .orderBy("idx")
-                .select("fromv", "tov").collect().toSeq
-                .map(r => (r.getInt(0), r.getInt(1)))).toOption
-              .filter(_.nonEmpty)
-          }
-      val resumed: Option[Seq[Int]] =
-        windows.flatMap { p =>
-          if (p.length == dirs.length &&
-              p.map(_._1) == from &&
-              p.map(_._2).zip(dirs).forall { case (v, d) =>
-                TxLog.retainedVersions(spark, d).contains(v) })
-            Some(p.map(_._2))
-          else None
-        }
-      resumed.getOrElse(now)
-    }
+    val curs: Seq[Int] =
+      StoreTxn.resumeWindow(store, pendingT, from)((i, v) =>
+        TxLog.retainedVersions(spark, dirs(i)).contains(v))
+        .getOrElse(dirs.map(TxLog.currentVersion(spark, _)))
     if (from == curs) return from.zip(curs)
     if (from.zip(dirs).exists { case (f, d) =>
         !TxLog.retainedVersions(spark, d).contains(f) })
       return seed() // fell behind a retention horizon
-    store.markerSet(pendingT, PendingMarker.encode(from.zip(curs)))
+    StoreTxn.beginWindow(store, pendingT, from, curs)
     // per-table feeds are independent eager work (each diff's probe
     // jobs + one churn-sized checkpoint) — construct them concurrently
     // (guide §2.6, the [[DbMv.refreshStar]] shape)

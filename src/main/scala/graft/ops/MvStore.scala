@@ -18,7 +18,7 @@ import graft.sources.TableStore
   *
   * Same storage discipline as every state machine in this repo:
   * group-hash sharded cells, touched-shard-only rewrites, the
-  * [[RollupStore]] writer fence, and stamp-probe replay detection
+  * [[StoreTxn]] writer fence, and stamp-probe replay detection
   * (any touched row stamped with the batch key proves the whole
   * refresh landed — rewrites are atomic per shard set). Groups whose
   * count reaches zero are REMOVED, so the state stays ndv-of-groups
@@ -73,8 +73,7 @@ object MvStore {
     require(groupCols.nonEmpty)
     val spark = rows.sparkSession
     import spark.implicits._
-    RollupStore.acquireFence(store, name, spark, "mv-init")
-    try {
+    StoreTxn.fenced(store, name, "mv-init") {
       // default (0): size shards to the GROUP cardinality — the state
       // is ndv-of-groups rows, and a fixed 64 would scatter a
       // few-hundred-group view into 64 tiny files per refresh. One
@@ -101,7 +100,7 @@ object MvStore {
         .withColumn("last_batch", lit(batchId))
       store.overwritePartitioned(state, stateTable(name), "cell")
       store.overwrite(Seq(shards).toDF("n_shards"), metaTable(name))
-    } finally RollupStore.releaseFence(store, name, spark)
+    }
   }
 
   /** Apply one change-feed batch ([[Scd2.changes]] schema). Returns
@@ -131,10 +130,8 @@ object MvStore {
     require(store.exists(metaTable(name)), s"mv '$name' not initialized")
     require(minMaxCols.isEmpty || current.nonEmpty,
       "min/max maintenance needs the source's post-change rows (current=)")
-    val spark = feed.sparkSession
     val nShards = store.read(metaTable(name), MetaSchema).head().getInt(0)
-    RollupStore.acquireFence(store, name, spark, "mv-refresh")
-    try {
+    StoreTxn.fenced(store, name, "mv-refresh") {
       val adds = col("change_type").isin("insert", "update_postimage")
       val growAggs = minMaxCols.flatMap(m => Seq(
         min(when(adds, col(m).cast("double"))).as(s"add_min_$m"),
@@ -186,68 +183,71 @@ object MvStore {
       val pr = delta.withColumn("__h", hashed)
         .agg(probeAggs.head, probeAggs.tail: _*).head()
       val touched: Seq[String] = pr.getSeq[String](0)
-      if (touched.isEmpty) return 0L
-      val groupsTouched = pr.getLong(1)
-      val bk = batchId.getOrElse(s"c${groupsTouched}h${pr.getLong(2)}")
-      val anyDirty = minMaxCols.nonEmpty && pr.getInt(3) == 1
-      val st = stateTable(name)
-      val stored = store.read(st)
-        .filter(col("cell").cast("string").isin(touched: _*))
-      if (stored.filter(col("last_batch") === bk).limit(1).count() > 0)
-        return -1L
-      // full-outer with coalesced group keys (null-safe — the USING
-      // form emits null-group rows from BOTH sides unpaired)
-      val base = RelationalOps.nullSafeMerge(
-        stored.drop("cell", "last_batch"), delta.drop("cell"), groupCols)
-      val recomputed =
-        if (minMaxCols.isEmpty) base
+      if (touched.isEmpty) 0L
+      else {
+        val groupsTouched = pr.getLong(1)
+        val bk = batchId.getOrElse(s"c${groupsTouched}h${pr.getLong(2)}")
+        val anyDirty = minMaxCols.nonEmpty && pr.getInt(3) == 1
+        val st = stateTable(name)
+        val stored = store.read(st)
+          .filter(col("cell").cast("string").isin(touched: _*))
+        if (stored.filter(col("last_batch") === bk).limit(1).count() > 0) -1L
         else {
-          // dirty groups re-derive their extremes from the pruned
-          // post-change source; everybody else grows in place. A
-          // GROW-ONLY batch (no delete/preimage row — the common
-          // append advance) has no dirty group, and must not pay the
-          // post-change source read at all: the probe is one scan of
-          // the already-checkpointed delta, and the skip path feeds
-          // the merge NULL recomputes (never selected — no __dirty
-          // row exists to select them)
-          val dirty = delta.filter(col("__dirty") === 1)
-            .select(groupCols.map(col): _*)
-          // the skip is decided by the fused probe above — the
-          // former isEmpty limit-scan was one more job per refresh
-          if (!anyDirty)
-            minMaxCols.foldLeft(base)((d, m) =>
-              d.withColumn(s"rc_min_$m", lit(null).cast("double"))
-                .withColumn(s"rc_max_$m", lit(null).cast("double")))
-          else {
-            val mmAggs = minMaxCols.flatMap(m => Seq(
-              min(col(m).cast("double")).as(s"rc_min_$m"),
-              max(col(m).cast("double")).as(s"rc_max_$m")))
-            val recomp = RelationalOps
-              .nullSafeSemi(current.get, dirty, groupCols)
-              .groupBy(groupCols.map(col): _*)
-              .agg(mmAggs.head, mmAggs.tail: _*)
-            RelationalOps.nullSafeMerge(base, recomp, groupCols, "left")
-          }
+          // full-outer with coalesced group keys (null-safe — the USING
+          // form emits null-group rows from BOTH sides unpaired)
+          val base = RelationalOps.nullSafeMerge(
+            stored.drop("cell", "last_batch"), delta.drop("cell"), groupCols)
+          val recomputed =
+            if (minMaxCols.isEmpty) base
+            else {
+              // dirty groups re-derive their extremes from the pruned
+              // post-change source; everybody else grows in place. A
+              // GROW-ONLY batch (no delete/preimage row — the common
+              // append advance) has no dirty group, and must not pay the
+              // post-change source read at all: the probe is one scan of
+              // the already-checkpointed delta, and the skip path feeds
+              // the merge NULL recomputes (never selected — no __dirty
+              // row exists to select them)
+              val dirty = delta.filter(col("__dirty") === 1)
+                .select(groupCols.map(col): _*)
+              // the skip is decided by the fused probe above — the
+              // former isEmpty limit-scan was one more job per refresh
+              if (!anyDirty)
+                minMaxCols.foldLeft(base)((d, m) =>
+                  d.withColumn(s"rc_min_$m", lit(null).cast("double"))
+                    .withColumn(s"rc_max_$m", lit(null).cast("double")))
+              else {
+                val mmAggs = minMaxCols.flatMap(m => Seq(
+                  min(col(m).cast("double")).as(s"rc_min_$m"),
+                  max(col(m).cast("double")).as(s"rc_max_$m")))
+                val recomp = RelationalOps
+                  .nullSafeSemi(current.get, dirty, groupCols)
+                  .groupBy(groupCols.map(col): _*)
+                  .agg(mmAggs.head, mmAggs.tail: _*)
+                RelationalOps.nullSafeMerge(base, recomp, groupCols, "left")
+              }
+            }
+          val mmOut = minMaxCols.flatMap(m => Seq(
+            when(col("__dirty") === 1, col(s"rc_min_$m"))
+              .otherwise(least(col(minCol(m)), col(s"add_min_$m")))
+              .as(minCol(m)),
+            when(col("__dirty") === 1, col(s"rc_max_$m"))
+              .otherwise(greatest(col(maxCol(m)), col(s"add_max_$m")))
+              .as(maxCol(m))))
+          val merged = recomputed
+            .select(((groupCols.map(col) :+
+              (coalesce(col("n"), lit(0L)) + coalesce(col("d_n"), lit(0L))).as("n")) ++
+              sumCols.map(m =>
+                (coalesce(col(sumCol(m)), lit(0.0)) +
+                  coalesce(col(s"d_$m"), lit(0.0))).as(sumCol(m))) ++ mmOut): _*)
+            .filter(col("n") > 0) // emptied groups leave the state
+            .withColumn("cell", cellOf(groupCols, nShards))
+            .withColumn("last_batch", lit(bk))
+          store.rewritePartitioned(merged, st, "cell", touched)
+          groupsTouched
         }
-      val mmOut = minMaxCols.flatMap(m => Seq(
-        when(col("__dirty") === 1, col(s"rc_min_$m"))
-          .otherwise(least(col(minCol(m)), col(s"add_min_$m")))
-          .as(minCol(m)),
-        when(col("__dirty") === 1, col(s"rc_max_$m"))
-          .otherwise(greatest(col(maxCol(m)), col(s"add_max_$m")))
-          .as(maxCol(m))))
-      val merged = recomputed
-        .select(((groupCols.map(col) :+
-          (coalesce(col("n"), lit(0L)) + coalesce(col("d_n"), lit(0L))).as("n")) ++
-          sumCols.map(m =>
-            (coalesce(col(sumCol(m)), lit(0.0)) +
-              coalesce(col(s"d_$m"), lit(0.0))).as(sumCol(m))) ++ mmOut): _*)
-        .filter(col("n") > 0) // emptied groups leave the state
-        .withColumn("cell", cellOf(groupCols, nShards))
-        .withColumn("last_batch", lit(bk))
-      store.rewritePartitioned(merged, st, "cell", touched)
-      groupsTouched
-    } finally RollupStore.releaseFence(store, name, spark)
+      }
+    }
   }
 
   /** The view. */
@@ -311,50 +311,13 @@ object MvStore {
       pinCursor(cur)
       return (from, cur)
     }
-    // PENDING INTENT (the JoinMv.followStar protocol): the advance's
-    // TARGET version persists BEFORE the refresh, so a retry after a
-    // crash-between-refresh-and-cursor resumes the EXACT stamped
-    // window — without it, a commit landing between crash and retry
-    // changes the batch id, the stamp is not recognized, and the old
-    // window's delta applies TWICE. A pending row is live only while
-    // `from` still equals its window start (the cursor moving makes
-    // it stale — no cleanup write); a pending target pruned by a
-    // racing vacuum falls back to the live version.
+    // PENDING INTENT ([[StoreTxn.resumeWindow]]): without it, a commit
+    // landing between a crash and the retry would change the batch id,
+    // and the old window's delta would apply TWICE
     val pendingT = s"${name}__mv_pending"
-    val to: Int = {
-      // the pending slot is a MARKER (file on the parquet backend —
-      // zero Spark jobs; the former 1-row-table overwrite + read were
-      // two more jobs per advance), the window in the token as "f:t".
-      // TOLERANT read: a crash inside the marker write itself must
-      // read as NO pending — that window's refresh provably had not
-      // started, so resuming at the live version is correct — never
-      // as a permanent wedge on an unreadable slot. (Same protocol in
-      // JoinMv.followStar; legacy TABLE-protocol slots read through
-      // the fallback below, once.)
-      val window: Option[(Int, Int)] =
-        scala.util.Try(store.markerHolder(pendingT)).toOption.flatten
-          .flatMap(PendingMarker.decode).flatMap(_.headOption)
-          .orElse {
-            if (!store.exists(pendingT)) None
-            else scala.util.Try {
-              val r = store.read(pendingT,
-                org.apache.spark.sql.types.StructType(Seq(
-                  org.apache.spark.sql.types.StructField("fromv",
-                    org.apache.spark.sql.types.IntegerType),
-                  org.apache.spark.sql.types.StructField("tov",
-                    org.apache.spark.sql.types.IntegerType)))).head()
-              (r.getInt(0), r.getInt(1))
-            }.toOption
-          }
-      val resumed = window.flatMap { case (f, t) =>
-        if (f == from && TxLog.retainedVersions(spark, dir).contains(t))
-          Some(t)
-        else None
-      }
-      resumed.getOrElse(cur)
-    }
-    if (from == to) return (from, to)
-    store.markerSet(pendingT, PendingMarker.encode(Seq((from, to))))
+    val to = StoreTxn.resumeWindow(store, pendingT, Seq(from))((_, v) =>
+      TxLog.retainedVersions(spark, dir).contains(v)).fold(cur)(_.head)
+    StoreTxn.beginWindow(store, pendingT, Seq(from), Seq(to))
     refresh(store, name,
       TxLog.asChangeFeed(TxLog.diff(spark, dir, from, to)),
       groupCols, sumCols, batchId = Some(s"v${from}_to_$to"))

@@ -46,8 +46,8 @@ import graft.sources.TableStore
   * of ALL batch keys would widen the window to arbitrary reordering
   * at the cost of an unbounded probe set; single-writer epoch
   * semantics don't need it. The single-writer contract itself is
-  * ENFORCED by a writer fence (see [[clearWriterFence]] and the
-  * acquire/release discipline on every mutating entry point), not
+  * ENFORCED by a writer fence ([[StoreTxn.fenced]] around every
+  * mutating entry point; [[clearWriterFence]] after a crash), not
   * merely assumed.
   */
 object RollupStore {
@@ -122,7 +122,6 @@ object RollupStore {
   }
 
   private def metaTable(name: String) = s"${name}__meta"
-  private def fenceTable(name: String) = s"${name}__writer_fence"
 
   // control-table schemas, KNOWN at the call site: reading them pinned
   // skips the footer-inference Spark job every unpinned parquet
@@ -142,46 +141,11 @@ object RollupStore {
     org.apache.spark.sql.types.StructField("physical",
       org.apache.spark.sql.types.StringType)))
 
-  /** The single-writer contract, ENFORCED (the `__split_state` marker
-    * discipline): every mutating entry point ([[init]], [[ingest]],
-    * [[reshard]]) takes a fence row for the duration of the call and
-    * releases it on every exit, success or failure — only a process
-    * death leaves it held. A second writer that starts while the fence
-    * is held fails loudly instead of interleaving half-merged shard
-    * rewrites with the first (the stamp-probe replay detection assumes
-    * serialized epochs — an interleaved writer could overwrite a
-    * shard's `last_batch` stamp mid-flight and un-detect a replay).
-    * This is crash-marker detection, not distributed CAS: two writers
-    * racing the EMPTY fence within one overwrite latency can both
-    * pass — the fence turns sustained concurrent use into a loud
-    * error, which is what a storage layer without conditional writes
-    * can honestly promise. After a crash, [[clearWriterFence]] is the
-    * operator's explicit recovery step.
+  /** Operator recovery after a writer crashed holding the fence
+    * ([[StoreTxn.fenced]] guards [[init]], [[ingest]] and [[reshard]]).
     */
-  private[ops] def acquireFence(
-      store: TableStore, name: String,
-      spark: org.apache.spark.sql.SparkSession, op: String): Unit = {
-    // fence storage lives behind [[TableStore.markerHolder]]/[[
-    // TableStore.markerSet]]: the parquet backend keeps the marker as
-    // a file (zero Spark jobs); relational backends keep the 1-row
-    // fence table. Same crash-marker contract either way.
-    store.markerHolder(fenceTable(name)).foreach { held =>
-      throw new IllegalStateException(
-        s"rollup '$name' has an active writer ($held) — " +
-          "single-writer contract violated; if that writer crashed, " +
-          "clearWriterFence() is the explicit recovery step")
-    }
-    store.markerSet(fenceTable(name), s"$op:${java.util.UUID.randomUUID()}")
-  }
-
-  private[ops] def releaseFence(
-      store: TableStore, name: String,
-      spark: org.apache.spark.sql.SparkSession): Unit =
-    store.markerClear(fenceTable(name))
-
-  /** Operator recovery after a writer crashed holding the fence. */
   def clearWriterFence(store: TableStore, name: String): Unit =
-    store.markerClear(fenceTable(name))
+    StoreTxn.clearFence(store, name)
 
   /** Resolved handle: shard count, sketch k, and the PHYSICAL state
     * table the logical name currently points at. All three live in
@@ -234,11 +198,7 @@ object RollupStore {
     * here through their raw values. The point of probing RAW is that
     * a REPLAYED batch is recognized before the sketch aggregation is
     * ever built (guide §1.2) — the replay path pays one ids-and-
-    * measures scan, not the groupBy+sketch pass. Key prefix 'r':
-    * a pre-upgrade partials-keyed stamp (`c<n>h<h>`) can never
-    * collide; the one-time cost is that a replay of a batch stamped
-    * by the OLD key function is not recognized (the reshard note's
-    * epoch caveat — same single-writer contract).
+    * measures scan, not the groupBy+sketch pass.
     */
   private def rawProbe(
       batch: DataFrame, keys: Seq[String], measures: Seq[String],
@@ -278,29 +238,27 @@ object RollupStore {
       quantileMeasures: Seq[String] = Nil,
       quantBins: Int = 512): Unit = {
     val spark = batch.sparkSession
-    import spark.implicits._
-    acquireFence(store, name, spark, "init")
-    try {
-    val bp = partial(batch, keys, measures, nShards, distinctMeasures, kmvK,
-      topkMeasures, topkK, quantileMeasures, quantBins)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val bk = batchId.getOrElse(rawProbe(batch, keys, measures,
-        distinctMeasures, topkMeasures, quantileMeasures, nShards)._2)
-      // state lands under a GENERATION name first, then the meta row
-      // publishes it — a crash in between leaves the rollup simply
-      // uninitialized, never half-pointed. The key→shard map must
-      // outlive the batch that created it (a later ingest re-hashing
-      // with a different shard count would split one key across two
-      // cells), and so must the sketch parameter: unioning sketches
-      // built at different k silently degrades the larger one — both
-      // are state, not call arguments
-      val phys = s"${name}__g0"
-      store.overwritePartitioned(
-        bp.withColumn("last_batch", lit(bk)), phys, "cell")
-      writeMeta(store, name, spark, nShards, kmvK, topkK, quantBins, phys)
-    } finally bp.unpersist()
-    } finally releaseFence(store, name, spark)
+    StoreTxn.fenced(store, name, "init") {
+      val bp = partial(batch, keys, measures, nShards, distinctMeasures, kmvK,
+        topkMeasures, topkK, quantileMeasures, quantBins)
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      try {
+        val bk = batchId.getOrElse(rawProbe(batch, keys, measures,
+          distinctMeasures, topkMeasures, quantileMeasures, nShards)._2)
+        // state lands under a GENERATION name first, then the meta row
+        // publishes it — a crash in between leaves the rollup simply
+        // uninitialized, never half-pointed. The key→shard map must
+        // outlive the batch that created it (a later ingest re-hashing
+        // with a different shard count would split one key across two
+        // cells), and so must the sketch parameter: unioning sketches
+        // built at different k silently degrades the larger one — both
+        // are state, not call arguments
+        val phys = s"${name}__g0"
+        store.overwritePartitioned(
+          bp.withColumn("last_batch", lit(bk)), phys, "cell")
+        writeMeta(store, name, spark, nShards, kmvK, topkK, quantBins, phys)
+      } finally bp.unpersist()
+    }
   }
 
   /** Fold a batch into the rollup. Returns the number of key rows
@@ -319,8 +277,7 @@ object RollupStore {
       quantileMeasures: Seq[String] = Nil): Long = {
     val rs = resolve(store, name)
     require(store.exists(rs.physical), s"rollup '$name' not initialized")
-    acquireFence(store, name, batch.sparkSession, "ingest")
-    try {
+    StoreTxn.fenced(store, name, "ingest") {
       // ONE single-pass raw aggregate answers the touched cells and
       // the content key, and runs BEFORE the partial build, so a
       // replayed batch skips the whole groupBy+sketch aggregation
@@ -328,29 +285,33 @@ object RollupStore {
       // replayed ingest).
       val (touched, rawK) = rawProbe(batch, keys, measures,
         distinctMeasures, topkMeasures, quantileMeasures, rs.nShards)
-      if (touched.isEmpty) return 0L
-      val bk = batchId.getOrElse(rawK)
-      val stored = store.read(rs.physical)
-        .filter(col("cell").cast("string").isin(touched: _*))
-      // replay probe: the rewrite is atomic across the touched shards,
-      // so ANY row stamped with this key proves the whole merge landed
-      if (stored.filter(col("last_batch") === bk).limit(1).count() > 0) return -1L
-      val bp = partial(batch, keys, measures, rs.nShards, distinctMeasures,
-        rs.kmvK, topkMeasures, rs.topkK, quantileMeasures, rs.quantBins)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      try {
-        // the returned key-row count reads the persisted partials —
-        // one metadata-cheap job on the non-replay path only
-        val keyRows = bp.count()
-        val merged = mergePartials(
-          stored.drop("last_batch").unionByName(bp), keys, measures,
-          distinctMeasures, rs.kmvK, topkMeasures, rs.topkK,
-          quantileMeasures, rs.quantBins)
-          .withColumn("last_batch", lit(bk))
-        store.rewritePartitioned(merged, rs.physical, "cell", touched)
-        keyRows
-      } finally bp.unpersist()
-    } finally releaseFence(store, name, batch.sparkSession)
+      if (touched.isEmpty) 0L
+      else {
+        val bk = batchId.getOrElse(rawK)
+        val stored = store.read(rs.physical)
+          .filter(col("cell").cast("string").isin(touched: _*))
+        // replay probe: the rewrite is atomic across the touched shards,
+        // so ANY row stamped with this key proves the whole merge landed
+        if (stored.filter(col("last_batch") === bk).limit(1).count() > 0) -1L
+        else {
+          val bp = partial(batch, keys, measures, rs.nShards, distinctMeasures,
+            rs.kmvK, topkMeasures, rs.topkK, quantileMeasures, rs.quantBins)
+            .persist(StorageLevel.MEMORY_AND_DISK)
+          try {
+            // the returned key-row count reads the persisted partials —
+            // one metadata-cheap job on the non-replay path only
+            val keyRows = bp.count()
+            val merged = mergePartials(
+              stored.drop("last_batch").unionByName(bp), keys, measures,
+              distinctMeasures, rs.kmvK, topkMeasures, rs.topkK,
+              quantileMeasures, rs.quantBins)
+              .withColumn("last_batch", lit(bk))
+            store.rewritePartitioned(merged, rs.physical, "cell", touched)
+            keyRows
+          } finally bp.unpersist()
+        }
+      }
+    }
   }
 
   /** Re-shard the state onto `newNShards` cells — the capacity
@@ -378,8 +339,7 @@ object RollupStore {
     require(newNShards > 0)
     val rs = resolve(store, name)
     val spark = store.read(rs.physical).sparkSession
-    acquireFence(store, name, spark, "reshard")
-    try {
+    StoreTxn.fenced(store, name, "reshard") {
       val gen = "__g(\\d+)$".r.findFirstMatchIn(rs.physical)
         .map(_.group(1).toInt).getOrElse(0)
       val next = s"${name}__g${gen + 1}"
@@ -387,7 +347,7 @@ object RollupStore {
         .drop("cell").withColumn("cell", cellOf(keys, newNShards))
       store.overwritePartitioned(recelled, next, "cell")
       writeMeta(store, name, spark, newNShards, rs.kmvK, rs.topkK, rs.quantBins, next)
-    } finally releaseFence(store, name, spark)
+    }
   }
 
   /** The physical state table the logical rollup currently reads —

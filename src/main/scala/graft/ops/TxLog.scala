@@ -3357,7 +3357,7 @@ object TxLog {
     * need external coordination for the claim — the standard
     * single-writer bound there.
     */
-  private[ops] def atomicClaim(fs: org.apache.hadoop.fs.FileSystem,
+  private[graft] def atomicClaim(fs: org.apache.hadoop.fs.FileSystem,
       tmp: Path, dest: Path): Boolean = {
     val claimed =
       if (fs.getScheme == "file") {

@@ -876,35 +876,23 @@ object IndexStore {
 
   // ------------------------------------------- split crash recovery
 
-  private def splitStateTable(name: String) = s"${name}__split_state"
+  private def splitSlot(name: String) = s"${name}__split_state"
 
-  /** The in-flight-split marker of index `name`: one (cell, pre_count,
-    * n_sub) row, written just before the centroid publish and cleared
-    * just after the row rewrite. Present and non-empty = a split
-    * crashed mid-flight.
+  /** The in-flight-split marker of index `name`: a "cell:pre:nSub"
+    * token held ([[graft.ops.StoreTxn.holding]]) from just before the
+    * centroid publish until just after the row rewrite. Present = a
+    * split crashed mid-flight. A malformed token can only come from a
+    * crash inside the marker write itself — before the centroid
+    * publish, so nothing is visible and it reads as no split.
     */
-  private def splitState(store: TableStore, name: String): Option[(Int, Int, Int)] = {
-    val t = splitStateTable(name)
-    if (!store.exists(t)) None
-    else store.read(t).collect().headOption.map(r =>
-      (r.getAs[Int]("cell"), r.getAs[Int]("pre_count"), r.getAs[Int]("n_sub")))
-  }
-
-  private def writeSplitState(
-      spark: SparkSession, store: TableStore, name: String,
-      cell: Int, pre: Int, nSub: Int): Unit = {
-    import spark.implicits._
-    store.overwrite(
-      Seq((cell, pre, nSub)).toDF("cell", "pre_count", "n_sub"),
-      splitStateTable(name))
-  }
-
-  private def clearSplitState(spark: SparkSession, store: TableStore, name: String): Unit = {
-    import spark.implicits._
-    store.overwrite(
-      Seq.empty[(Int, Int, Int)].toDF("cell", "pre_count", "n_sub"),
-      splitStateTable(name))
-  }
+  private[graft] def splitState(store: TableStore, name: String): Option[(Int, Int, Int)] =
+    store.markerHolder(splitSlot(name)).flatMap(tok => scala.util.Try {
+      val Array(cell, pre, nSub) = tok.split(":").map(_.toInt)
+      (cell, pre, nSub)
+    }.toOption)
+  private[graft] def holdingSplit[T](
+      store: TableStore, name: String, cell: Int, pre: Int, nSub: Int)(body: => T): T =
+    graft.ops.StoreTxn.holding(store, splitSlot(name), s"$cell:$pre:$nSub")(body)
 
   /** Shared split-recovery skeleton: if `name` carries an in-flight
     * split marker, either discard it (crash BEFORE the centroid
@@ -927,9 +915,8 @@ object IndexStore {
       case None => None
       case Some((cell, pre, nSub)) =>
         val cens = loadIvfCentroids(store, name)
-        val spark = store.read(s"${name}__centroids").sparkSession
         if (cens.length == pre) {
-          clearSplitState(spark, store, name)
+          store.markerClear(splitSlot(name))
           None
         } else {
           require(cens.length == pre + nSub - 1,
@@ -937,7 +924,7 @@ object IndexStore {
               s"${cens.length} exist — centroid table mutated outside the split protocol")
           val subs: Array[Array[Float]] = cens(cell) +: cens.slice(pre, pre + nSub - 1)
           finish(cell, pre, subs)
-          clearSplitState(spark, store, name)
+          store.markerClear(splitSlot(name))
           Some(cell)
         }
     }
@@ -1038,11 +1025,10 @@ object IndexStore {
     require(sample.nonEmpty, s"cell $cell of $name holds no vectors")
     val subs = Pq.lloyd(sample, math.min(nSub, sample.length), lloydIters)
     val newCens = cens.updated(cell, subs(0)) ++ subs.drop(1)
-    val spark = cellRows.sparkSession
-    writeSplitState(spark, store, phys, cell, cens.length, subs.length)
-    store.overwrite(centroidsDf(spark, newCens), s"${phys}__centroids")
-    finishIvf(cell, cens.length, subs)
-    clearSplitState(spark, store, phys)
+    holdingSplit(store, phys, cell, cens.length, subs.length) {
+      store.overwrite(centroidsDf(cellRows.sparkSession, newCens), s"${phys}__centroids")
+      finishIvf(cell, cens.length, subs)
+    }
     loadIvf(store, name)
   }
 
@@ -1112,11 +1098,10 @@ object IndexStore {
     val sample = Ivf.hashOrderedSample(cellVecs, maxTrain, "id", "vec")
     val subs = Pq.lloyd(sample, math.min(nSub, sample.length), lloydIters)
     val newCens = cens.updated(cell, subs(0)) ++ subs.drop(1)
-    val spark = vectors.sparkSession
-    writeSplitState(spark, store, phys, cell, cens.length, subs.length)
-    store.overwrite(centroidsDf(spark, newCens), s"${phys}__centroids")
-    finishPq(cell, cens.length, subs)
-    clearSplitState(spark, store, phys)
+    holdingSplit(store, phys, cell, cens.length, subs.length) {
+      store.overwrite(centroidsDf(vectors.sparkSession, newCens), s"${phys}__centroids")
+      finishPq(cell, cens.length, subs)
+    }
     loadIvfPq(store, name)
   }
 

@@ -79,42 +79,32 @@ trait TableStore {
       partitionCol: String,
       sourceValues: Seq[String]): Unit
 
-  /** One-row MARKER tables — writer fences and pending-intent slots
-    * (see [[graft.ops.RollupStore.acquireFence]],
-    * [[graft.ops.JoinMv.followStar]]'s pending protocol): a token
-    * string that is present or absent, read at the top of every store
-    * op, whose loss semantics are "treat as absent". Default: a 1-row
-    * `table` via the ordinary read/overwrite surface — works on every
-    * backend. Backends with a cheaper primitive override: the parquet
-    * store keeps the marker as a FILE, so a set/probe/clear cycle
-    * costs zero Spark jobs instead of three (fixed per-ingest cost,
-    * guide §1.2). Durable multi-row STATE (cursors, ledgers) stays on
-    * the table surface — markers are only for single-token
-    * fence/intent slots.
+  /** Single-token SLOTS — writer fences, pending-intent windows,
+    * in-flight markers (the protocol lives in [[graft.ops.StoreTxn]]):
+    * a token string that is present or absent, read at the top of a
+    * store op, whose loss semantics are "treat as absent". Every
+    * backend keeps exactly ONE on-disk format for a slot — the parquet
+    * store a `_HELD` file (zero Spark jobs per set/probe/clear), JDBC a
+    * 1-row table — so these have no default: a delegating store must
+    * forward all three, or its slots would land in a second format the
+    * wrapped backend never reads. Durable multi-row state (cursors,
+    * ledgers) stays on the table surface.
     */
-  def markerHolder(table: String): Option[String] = {
-    // column-NAME agnostic on purpose: the pre-seam protocols spelled
-    // their one string column differently per slot ("token",
-    // "batch_key") — the marker is whatever single value the row holds
-    if (!exists(table)) None
-    else read(table).collect()
-      .headOption.flatMap(r => Option(r.get(0)).map(_.toString))
-  }
-  private def markerDf(tokens: Seq[String]): DataFrame =
-    spark.createDataFrame(
-      java.util.Arrays.asList(
-        tokens.map(org.apache.spark.sql.Row(_)): _*),
-      TableStore.MarkerSchema)
-  def markerSet(table: String, token: String): Unit =
-    overwrite(markerDf(Seq(token)), table)
-  def markerClear(table: String): Unit =
-    overwrite(markerDf(Nil), table)
-}
+  def markerHolder(table: String): Option[String]
+  def markerSet(table: String, token: String): Unit
+  def markerClear(table: String): Unit
 
-object TableStore {
-  private[sources] val MarkerSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("token",
-      org.apache.spark.sql.types.StringType)))
+  /** Claim the slot for `token` if it is free: None once claimed, else
+    * the current holder. The default probes then sets — two writers
+    * racing a free slot within one write latency can both pass, which
+    * is the JDBC contract; backends with an atomic create-if-absent
+    * override it ([[ParquetStore]]).
+    */
+  def markerClaim(table: String, token: String): Option[String] =
+    markerHolder(table) match {
+      case None => markerSet(table, token); None
+      case held => held
+    }
 }
 
 /** Parquet-directory warehouse: one directory per table under `dir`.
@@ -171,54 +161,38 @@ final class ParquetStore(val spark: SparkSession, dir: String) extends TableStor
     ParquetUpsert.mergeByKey(spark, path(name), df, Seq(key))
   }
 
-  /** Markers as a FILE under the marker-table dir — zero Spark jobs
-    * on the set/probe/clear path (the default table protocol paid
-    * three per mutating store op). Crash semantics unchanged: the
-    * file is the `__split_state`-style crash marker — present means
-    * active-or-crashed holder, a process death leaves it held, and a
-    * clear (or, for pending slots, the protocol's staleness rule)
-    * retires it. Same honesty caveat as the table protocol: two
-    * writers racing a FREE fence within one create latency can both
-    * pass; the fence turns sustained concurrent use into a loud
-    * error. LEGACY: a marker planted by the old table protocol (a
-    * 1-row parquet table, no marker file) still reads as held — that
-    * read pays the one Spark job until the first file-marker set or
-    * clear replaces it.
+  /** Slots as a `_HELD` FILE under the slot's dir — zero Spark jobs
+    * on the set/probe/clear path. Present means active-or-crashed
+    * holder; a process death leaves it held, and a clear (or, for
+    * pending windows, the resume rule) retires it. [[markerClaim]] is
+    * atomic: the token lands in a temp file that [[graft.ops.TxLog
+    * .atomicClaim]] links into place with no overwrite (link(2) on
+    * `file:`, a no-overwrite rename elsewhere), so exactly one of any
+    * number of racing writers takes a free fence.
     */
   private def markerFile(table: String) = new Path(path(table), "_HELD")
-  override def markerHolder(table: String): Option[String] = {
-    val d = new Path(path(table))
-    if (!fs.exists(d)) return None
-    val m = markerFile(table)
-    if (fs.exists(m)) {
-      val in = fs.open(m)
+  def markerHolder(table: String): Option[String] =
+    try {
+      val in = fs.open(markerFile(table))
       try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString)
       finally in.close()
-    } else if (fs.listStatus(d).exists(f =>
-        f.isFile && f.getPath.getName.endsWith(".parquet"))) {
-      // legacy table-protocol marker (pre-marker code, or a test
-      // planting a dead writer through overwrite) — column-name
-      // agnostic, same reason as the trait default
-      spark.read.parquet(d.toString).collect()
-        .headOption.flatMap(r => Option(r.get(0)).map(_.toString))
-    } else None
+    } catch { case _: java.io.FileNotFoundException => None }
+  def markerSet(table: String, token: String): Unit =
+    writeMarker(markerFile(table), token)
+  def markerClear(table: String): Unit =
+    fs.delete(markerFile(table), false)
+  override def markerClaim(table: String, token: String): Option[String] = {
+    val tmp = new Path(path(table), s".claim-${java.util.UUID.randomUUID()}.tmp")
+    writeMarker(tmp, token)
+    if (graft.ops.TxLog.atomicClaim(fs, tmp, markerFile(table))) None
+    // the holder may clear between the lost claim and this read
+    else markerHolder(table).orElse(markerClaim(table, token))
   }
-  override def markerSet(table: String, token: String): Unit = {
-    val d = new Path(path(table))
-    val m = markerFile(table)
-    // first file-marker set over a legacy table slot: drop the stale
-    // rows so a later probe never re-reads them (one LIST on that
-    // transition only — steady state goes straight to the create)
-    if (!fs.exists(m) && fs.exists(d))
-      fs.listStatus(d).filter(f => f.isFile &&
-          !f.getPath.getName.startsWith("_"))
-        .foreach(f => fs.delete(f.getPath, false))
-    val out = fs.create(m, true)
+  private def writeMarker(p: Path, token: String): Unit = {
+    val out = fs.create(p, true)
     try out.write(token.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
   }
-  override def markerClear(table: String): Unit =
-    fs.delete(new Path(path(table)), true)
 
   override def compact(
       name: String,
@@ -631,6 +605,24 @@ final class JdbcStore(
     stagedAppend(df, name, Some(key))
   def appendPartitioned(df: DataFrame, name: String, partitionCol: String): Unit =
     stagedAppend(df, name, None)
+
+  /** Slots as 1-row `token` tables through the ordinary read/overwrite
+    * surface. The claim keeps the trait's probe-then-set default.
+    */
+  def markerHolder(table: String): Option[String] =
+    if (!exists(table)) None
+    else read(table).collect()
+      .headOption.flatMap(r => Option(r.getString(0)))
+  def markerSet(table: String, token: String): Unit =
+    overwrite(markerDf(Seq(token)), table)
+  def markerClear(table: String): Unit =
+    overwrite(markerDf(Nil), table)
+  private def markerDf(tokens: Seq[String]): DataFrame =
+    spark.createDataFrame(
+      java.util.Arrays.asList(tokens.map(org.apache.spark.sql.Row(_)): _*),
+      org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField("token",
+          org.apache.spark.sql.types.StringType))))
 
   /** Partition surgery, relationally: stage the replacement rows, then
     * in ONE transaction validate, DELETE the source partitions' rows

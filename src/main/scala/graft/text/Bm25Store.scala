@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
+import graft.ops.StoreTxn
 import graft.sources.TableStore
 import graft.similarity.IndexStore
 
@@ -29,7 +30,10 @@ import graft.similarity.IndexStore
   *                      batch's id set — replay dedups by key, and
   *                      corpus stats (N, avgdl) are ledger sums, never
   *                      a corpus scan.
-  *  - `<name>__pending` the in-flight-append marker.
+  *  - `<name>__pending` the in-flight-append marker: the batch key in
+  *                      a [[TableStore]] marker slot (a `_HELD` file on
+  *                      parquet, a 1-row table on JDBC), held through
+  *                      [[graft.ops.StoreTxn.holding]].
   *
   * '''Crash contract''' (single-writer, at-least-once batch replay —
   * the same contract as streaming ANN ingest): the marker is set
@@ -77,21 +81,6 @@ object Bm25Store {
     (r.getAs[Int]("n_buckets"), r.getAs[Int]("n_shards"))
   }
 
-  // the in-flight marker rides [[TableStore.markerSet]] — a file on
-  // the parquet backend (zero Spark jobs per set/probe/clear; the
-  // former 1-row table overwrites were two write jobs + a read job
-  // per append), the 1-row table on relational backends. A pending
-  // slot planted by the old table protocol still reads as held
-  // (legacy branch of [[graft.sources.ParquetStore.markerHolder]]).
-  private def pendingSet(store: TableStore, name: String, batchKey: String): Unit =
-    store.markerSet(pendingTable(name), batchKey)
-
-  private def pendingClear(store: TableStore, name: String): Unit =
-    store.markerClear(pendingTable(name))
-
-  private def isPending(store: TableStore, name: String): Boolean =
-    store.markerHolder(pendingTable(name)).nonEmpty
-
   /** Create the index from an initial corpus: meta, first ingest, and
     * the registry's id-bloom sidecar (so every later batch gets the
     * zero-read all-novel fast path). Returns ingested doc count.
@@ -128,7 +117,7 @@ object Bm25Store {
       idCol: String = "doc_id",
       textCol: String = "text"): Long = {
     val (nBuckets, nShards) = readMeta(store, name)
-    val recovering = isPending(store, name)
+    val recovering = store.markerHolder(pendingTable(name)).nonEmpty
     // REPLAY PRE-PROBE (guide §1.2): novelty is monotone over id sets
     // — the postings' ids are a subset of the raw batch's ids (an
     // empty-text doc yields no posting), so a batch whose RAW ids are
@@ -183,30 +172,30 @@ object Bm25Store {
         val (nDocs, nTokens) = (st.getAs[Long]("n"), st.getAs[Long]("t"))
         if (nDocs == 0 && !recovering) return 0L
         val batchKey = s"c${st.getAs[Long]("c")}h${st.getAs[Long]("h")}"
-        pendingSet(store, name, batchKey)
-        if (nDocs > 0) {
-          val spark = docs.sparkSession
-          import spark.implicits._
-          store.appendKeyed(
-            Seq((batchKey, nDocs, nTokens)).toDF("batch_key", "n_docs", "n_tokens"),
-            ledgerTable(name), "batch_key")
-          val novelPost = post.join(fresh.select("id"), Seq("id"), "left_semi")
-            .select("cell", "id", "term", "tf", "dl")
-          // recovery: the one corpus-postings read in the design —
-          // row-exact completion of a partially-published append
-          val out =
-            if (recovering && store.exists(name))
-              novelPost.join(
-                store.read(name).select("cell", "id", "term"),
-                Seq("cell", "id", "term"), "left_anti")
-            else novelPost
-          store.appendPartitioned(out, name, "cell")
-          // registry commits LAST: novelty is never recorded for
-          // postings that did not land (bloom updates inside, before
-          // its rows — the over-approximating safe direction)
-          IndexStore.appendKnownNewById(store, registryTable(name), fresh)
+        StoreTxn.holding(store, pendingTable(name), batchKey) {
+          if (nDocs > 0) {
+            val spark = docs.sparkSession
+            import spark.implicits._
+            store.appendKeyed(
+              Seq((batchKey, nDocs, nTokens)).toDF("batch_key", "n_docs", "n_tokens"),
+              ledgerTable(name), "batch_key")
+            val novelPost = post.join(fresh.select("id"), Seq("id"), "left_semi")
+              .select("cell", "id", "term", "tf", "dl")
+            // recovery: the one corpus-postings read in the design —
+            // row-exact completion of a partially-published append
+            val out =
+              if (recovering && store.exists(name))
+                novelPost.join(
+                  store.read(name).select("cell", "id", "term"),
+                  Seq("cell", "id", "term"), "left_anti")
+              else novelPost
+            store.appendPartitioned(out, name, "cell")
+            // registry commits LAST: novelty is never recorded for
+            // postings that did not land (bloom updates inside, before
+            // its rows — the over-approximating safe direction)
+            IndexStore.appendKnownNewById(store, registryTable(name), fresh)
+          }
         }
-        pendingClear(store, name)
         nDocs
       } finally fresh.unpersist()
     } finally post.unpersist()

@@ -269,30 +269,6 @@ class JoinMvSpec extends SparkSpec {
           round(sum(col("price").cast("double")), 2).as("sum_price"))))
   }
 
-  test("a pre-star view's legacy cursor is adopted, not reseeded") {
-    val (f, d, st) = fixtures()
-    JoinMv.follow(st, "v", f, d, K, G, M)
-    // manufacture the pre-star state: the legacy (fact_v, dim_v)
-    // cursor row, star cursor absent
-    val curs = st.read("v__jmvs_cursor").orderBy("idx")
-      .select("ver").collect().map(_.getInt(0))
-    st.overwrite(Seq((curs(0), curs(1))).toDF("fact_v", "dim_v"),
-      "v__jmv_cursor")
-    val cursorPath = new org.apache.hadoop.fs.Path(
-      st.read("v__jmvs_cursor").inputFiles.head).getParent
-    cursorPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .delete(cursorPath, true)
-    // churn, then follow: the adopted cursor must ADVANCE from the
-    // legacy versions (an accidental reseed would return from == to)
-    UpsertWhere.byKeys(spark, f, "o_orderkey",
-      TxLog.snapshot(spark, f).filter(col("o_orderkey") % 19 === 0)
-        .withColumn("price", col("price") + 5))
-    val ((ff, ft), (df_, dt)) = JoinMv.follow(st, "v", f, d, K, G, M)
-    assert(ff == curs(0) && ft == ff + 1, s"fact cursor adopted: $ff -> $ft")
-    assert(df_ == curs(1) && dt == df_, "dim cursor adopted unchanged")
-    assert(same(view(st), direct(f, d)))
-  }
-
   test("star/snowflake (3-table) view: every table churns in one advance, terms telescope exactly") {
     val root = Files.createTempDirectory("joinmv_star").toString
     val f = s"$root/fact"; val d1 = s"$root/cust"; val d2 = s"$root/nat"

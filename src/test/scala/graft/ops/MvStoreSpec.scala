@@ -180,7 +180,7 @@ class MvStoreSpec extends SparkSpec {
     val store = tmpStore()
     MvStore.init(store, "f_mv", cust, groups, sums, nShards = 2)
     // simulate a crashed writer holding the fence
-    RollupStore.acquireFence(store, "f_mv", spark, "mv-refresh")
+    StoreTxn.acquireFence(store, "f_mv", "mv-refresh")
     intercept[IllegalStateException] {
       MvStore.init(store, "f_mv", cust, groups, sums, nShards = 2)
     }

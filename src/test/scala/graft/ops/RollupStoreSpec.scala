@@ -189,10 +189,12 @@ class RollupStoreSpec extends SparkSpec {
     def rewritePartitioned(df: DataFrame, n: String, p: String, sv: Seq[String]): Unit = {
       onRewrite(); inner.rewritePartitioned(df, n, p, sv)
     }
+    def markerHolder(t: String): Option[String] = inner.markerHolder(t)
+    def markerSet(t: String, tok: String): Unit = inner.markerSet(t, tok)
+    def markerClear(t: String): Unit = inner.markerClear(t)
   }
 
   test("writer fence: an overlapping second writer fails loudly, a failed one releases, a dead one needs explicit recovery") {
-    import spark.implicits._
     val store = tmpStore()
     RollupStore.init(store, "wf", li.filter(col("l_partkey") <= 5), keys, ms, nShards = 8)
 
@@ -222,7 +224,7 @@ class RollupStoreSpec extends SparkSpec {
     // (3) a writer that DIED holding the fence (simulated by the
     // on-disk state a kill leaves): loud rejection naming the recovery
     // step, then clearWriterFence restores service
-    store.overwrite(Seq("ingest:dead-writer").toDF("token"), "wf__writer_fence")
+    store.markerSet("wf__writer_fence", "ingest:dead-writer")
     val e = intercept[IllegalStateException] {
       RollupStore.ingest(store, "wf", li.filter(col("l_partkey") === 13), keys, ms)
     }

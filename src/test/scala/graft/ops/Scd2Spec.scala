@@ -85,6 +85,9 @@ class Scd2Spec extends SparkSpec {
         if (n.endsWith("__current"))
           throw new RuntimeException("simulated crash before current rewrite")
         else inner.rewritePartitioned(df, n, p, sv)
+      def markerHolder(t: String): Option[String] = inner.markerHolder(t)
+      def markerSet(t: String, tok: String): Unit = inner.markerSet(t, tok)
+      def markerClear(t: String): Unit = inner.markerClear(t)
     }
     Scd2.merge(inner, "c", cust, keys, attrs, version = 1, nShards = 4)
     val v2 = cust.withColumn("c_mktsegment", lit("CHANGED"))

@@ -281,6 +281,9 @@ class IndexStoreSpec extends SparkSpec {
     def rewritePartitioned(df: DataFrame, n: String, p: String, sv: Seq[String]): Unit = {
       maybeCrash("rewrite", n); inner.rewritePartitioned(df, n, p, sv)
     }
+    def markerHolder(t: String): Option[String] = inner.markerHolder(t)
+    def markerSet(t: String, tok: String): Unit = inner.markerSet(t, tok)
+    def markerClear(t: String): Unit = inner.markerClear(t)
   }
 
   test("split recovery: crash between centroid publish and row rewrite completes, no duplicate centroids") {

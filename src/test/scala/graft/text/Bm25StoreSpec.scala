@@ -68,7 +68,7 @@ class Bm25StoreSpec extends SparkSpec {
         pmod(xxhash64(col("term")), lit(8L)).cast("int").as("cell"),
         col("doc_id").as("id"), col("term"), col("tf"), col("dl"))
     store.appendPartitioned(bPost.filter(xxhash64(col("id"), col("term")) % 2 === 0), "cr", "cell")
-    store.overwrite(Seq("crashkey").toDF("batch_key"), "cr__pending")
+    store.markerSet("cr__pending", "crashkey")
     // the replayed batch must heal: exact row completion, no dupes
     assert(Bm25Store.appendDocs(store, "cr", b) == b.count())
     val landed = store.read("cr").filter(col("id") >= 40)
